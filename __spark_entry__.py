@@ -1522,17 +1522,9 @@ def _kernel_oracles() -> dict[str, str]:
 
     # cell tokens
     toks = cid.token_from_id(leaf)
-    _ORACLE_CACHE["cell_tokens"] = _values_sql(
-        list(zip(doc_id.tolist(), toks)),
-        [("doc_id", "BIGINT"), ("token", "VARCHAR")],
-    )
 
     # cell centers (same kernel as the UDF -> bit-identical doubles)
     clat, clng = cid.cell_id_to_center_latlng(leaf)
-    _ORACLE_CACHE["cell_centers"] = _values_sql(
-        list(zip(doc_id.tolist(), np.degrees(clat), np.degrees(clng))),
-        [("doc_id", "BIGINT"), ("center_lat", "DOUBLE"), ("center_lon", "DOUBLE")],
-    )
 
     # consolidated codec row: geocode passthrough (dual-SQL) + token +
     # center (kernel VALUES) in one query (r3 snapshot-cap merge)
@@ -1929,10 +1921,6 @@ FROM r WHERE rnk <= 3
 
     a_cov, b_cov = _union_fixture_coverings()
     union_kernel = normalize_cell_union(list(a_cov) + list(b_cov))
-    _ORACLE_CACHE["cell_union_normalize"] = _values_sql(
-        [(t,) for t in cid.token_from_id(np.asarray(union_kernel, dtype=np.uint64))],
-        [("token", "VARCHAR")],
-    )
 
     def _contained(c, cells):
         lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
@@ -1946,10 +1934,6 @@ FROM r WHERE rnk <= 3
     inter_kernel = sorted(
         {c for c in a_cov if _contained(c, b_cov)}
         | {c for c in b_cov if _contained(c, a_cov)}
-    )
-    _ORACLE_CACHE["cell_intersection"] = _values_sql(
-        [(t,) for t in cid.token_from_id(np.asarray(inter_kernel, dtype=np.uint64))],
-        [("token", "VARCHAR")],
     )
 
     _ORACLE_CACHE["region_expand"] = _values_sql(
@@ -1988,10 +1972,6 @@ FROM r WHERE rnk <= 3
     )
 
     diff_kernel = cell_union_difference(list(a_cov), list(b_cov))
-    _ORACLE_CACHE["cell_difference"] = _values_sql(
-        [(t,) for t in cid.token_from_id(np.asarray(diff_kernel, dtype=np.uint64))],
-        [("token", "VARCHAR")],
-    )
 
     # consolidated cell-set algebra (r3 snapshot-cap merge): the three
     # ops in one op-tagged table
@@ -2249,17 +2229,11 @@ def oracle_sql() -> dict[str, str]:
     from s2_geometry_library_php_spark.sources.documents import (
         GEOCODE_LAT_SQL,
         GEOCODE_LON_SQL,
-        URL_SQL_DUCKDB,
     )
 
     out: dict[str, str] = {}
 
     # --- dual-SQL oracles ----------------------------------------------------
-    out["geocode"] = (
-        f"SELECT doc_id, {URL_SQL_DUCKDB} AS url, "
-        f"{GEOCODE_LAT_SQL} AS lat, {GEOCODE_LON_SQL} AS lon FROM documents"
-    )
-
     out["exact_dedup"] = (
         f"SELECT {fingerprint_duckdb('text')} AS fingerprint, "
         f"CAST(count(*) AS BIGINT) AS dup_count, "
@@ -2565,21 +2539,5 @@ FROM rev
 
     # --- kernel-backed VALUES oracles ------------------------------------------
     out.update(_kernel_oracles())
-
-    # r3 consolidation (COVERAGE.md): superseded standalone oracles are
-    # still built as intermediates above but not exported — the
-    # returned keys mirror queries() exactly.
-    for stale in (
-        "geocode",
-        "cell_tokens",
-        "cell_centers",
-        "lang_id",
-        "quality",
-        "token_count",
-        "cell_union_normalize",
-        "cell_intersection",
-        "cell_difference",
-    ):
-        out.pop(stale, None)
 
     return out

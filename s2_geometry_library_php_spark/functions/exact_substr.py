@@ -121,7 +121,9 @@ def _gram_hashes(text_col: str, k: int):
     """Array of md5 digests, one per k-token window (``[]`` when the
     document has fewer than k tokens).  Tokenization is the module
     family's whitespace convention (single-space split, empty tokens
-    preserved) so twins agree byte-for-byte."""
+    preserved) so twins agree byte-for-byte.  Like the Arrow kernel,
+    a document whose gram positions overflow ``_POS_BITS`` fails the
+    query instead of corrupting the packed ``(doc_id, pos)`` keys."""
     w = F.split(F.col(text_col), " ")
     n = F.size(w)
     grams = F.transform(
@@ -132,8 +134,17 @@ def _gram_hashes(text_col: str, k: int):
             )
         ),
     )
-    return F.when(n >= F.lit(k), grams).otherwise(
-        F.array().cast("array<string>")
+    too_long = F.raise_error(
+        F.concat(
+            F.lit("document has "), n.cast("string"),
+            F.lit(f" tokens; gram positions must fit in {_POS_BITS} bits"
+                  " (see duplicate_grams packing)"),
+        )
+    )
+    return (
+        F.when(n - F.lit(k) >= F.lit(_POS_PACK), too_long)
+        .when(n >= F.lit(k), grams)
+        .otherwise(F.array().cast("array<string>"))
     )
 
 

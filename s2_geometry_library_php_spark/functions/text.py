@@ -63,19 +63,6 @@ def _quote_list_sql(words: list[str]) -> str:
 
 
 # --- language ID -----------------------------------------------------------------
-def lang_id_sql_spark(text_col: str = "text") -> str:
-    """argmax of marker-word votes; CJK codepoints force 'zh';
-    all-zero votes -> 'und'."""
-    votes = []
-    lowered = f"translate({text_col}, '{ASCII_UPPER}', '{ASCII_LOWER}')"
-    for lang, markers in LANG_MARKERS.items():
-        votes.append(
-            f"size(filter(split({lowered}, ' '), "
-            f"w -> array_contains(array({_quote_list_sql(markers)}), w))) AS v_{lang}"
-        )
-    return votes
-
-
 def _membership(markers: list[str]):
     # NB: the lambda must take exactly one arg — a two-arg lambda makes
     # F.filter pass (element, index).
@@ -89,8 +76,6 @@ def lang_id_column(text_col: str = "text") -> Column:
         for lang, markers in LANG_MARKERS.items()
     }
     has_cjk = F.col(text_col).rlike("[\\u4e00-\\u9fff]")
-    best = None
-    best_votes = None
     # deterministic argmax: iterate in fixed order, strict > to switch
     expr = F.lit("und")
     max_v = F.lit(0)
@@ -98,7 +83,6 @@ def lang_id_column(text_col: str = "text") -> Column:
         v = votes[lang]
         expr = F.when(v > max_v, F.lit(lang)).otherwise(expr)
         max_v = F.greatest(max_v, v)
-    _ = best, best_votes
     return F.when(has_cjk, F.lit("zh")).otherwise(expr)
 
 
@@ -269,10 +253,6 @@ def token_count_column(text_col: str = "text") -> Column:
 
 def token_count_duckdb(text_col: str = "text") -> str:
     return f"CAST(len(regexp_extract_all({text_col}, '{TOKEN_REGEX}')) AS BIGINT)"
-
-
-def whitespace_token_count_column(text_col: str = "text") -> Column:
-    return F.size(F.split(F.col(text_col), WS_CLASS + "+")).cast("long")
 
 
 # --- fingerprinting -----------------------------------------------------------------

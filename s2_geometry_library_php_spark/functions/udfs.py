@@ -160,32 +160,6 @@ def s2_rect_contains_cols(lat, lon, lat_lo, lat_hi, lng_lo, lng_hi):
     return lat_ok & lng_ok
 
 
-def make_loop_contains_udf(vertices_latlng_deg):
-    """Factory: a pandas UDF `f(lat, lon) -> bool` bound to one loop
-    (vertices broadcast in the closure) — the standalone surface of
-    the refine kernel for users who want a WHERE-clause predicate
-    instead of the covering join."""
-    v = np.asarray(vertices_latlng_deg, dtype=np.float64)
-    verts = geom.normalize(
-        geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-    )
-    origin_inside = geom.loop_origin_inside(verts)
-
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def loop_contains(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        if len(lat) == 0:
-            return pd.Series([], dtype=bool)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        return pd.Series(geom.loop_contains_points(verts, origin_inside, pts))
-
-    return loop_contains
-
-
 def register_sql_functions(spark) -> None:
     """Register the §2.11 public API under SQL names so `spark.sql`
     users get the same surface as the DataFrame API.  Integer bit ops

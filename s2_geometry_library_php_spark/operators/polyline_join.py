@@ -7,7 +7,8 @@ exact crossing/distance): polylines are covered edge-by-edge
 ``S2CellUnion.expand`` (S2CellUnion.php:354-415), broadcast, and
 probed with the same banded-prefix equi-join as the point-in-region
 join; survivors are refined with the exact point-to-edge distance
-kernel (S2EdgeUtil.php:271-309).
+kernel (S2EdgeUtil.php:271-309) through the same covering-join
+skeleton (``spatial_join._covering_join``).
 """
 
 from __future__ import annotations
@@ -18,11 +19,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from ..s2core import cellid as cid
+from ..functions.sql_bitops import _signed64, s2_level
 from ..s2core import geom
+from ..s2core.cellid import level_scalar
 from ..s2core.coverer import expand_by_radius
 from ..s2core.edges import polyline_covering
-from .spatial_join import _parent_col, _sig, _lvl
+from .spatial_join import _covering_join
+
+#: endpoint columns of an edge pair AB x CD, in the crossing kernel's order
+_EDGE_PAIR_COLS = (
+    "ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz", "dx", "dy", "dz",
+)
+
+
+def _polyline_xyz(spec: dict) -> np.ndarray:
+    """Unit xyz vertices of a ``{line_id, vertices: [[lat, lng] deg]}``
+    spec."""
+    v = np.asarray(spec["vertices"], dtype=np.float64)
+    return geom.normalize(
+        geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+    )
+
+
+def _crossing_pairs(pairs: DataFrame) -> DataFrame:
+    """Rows of ``pairs`` whose edges AB and CD properly cross
+    (vectorized ``robustCrossing``)."""
+
+    @F.pandas_udf(BooleanType())
+    def crosses(*cols: pd.Series) -> pd.Series:
+        if len(cols[0]) == 0:
+            return pd.Series([], dtype=bool)
+        m = [c.to_numpy(np.float64) for c in cols]
+        a = np.stack(m[0:3], axis=1)
+        b = np.stack(m[3:6], axis=1)
+        c_ = np.stack(m[6:9], axis=1)
+        d = np.stack(m[9:12], axis=1)
+        return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
+
+    return pairs.where(crosses(*[F.col(c) for c in _EDGE_PAIR_COLS]))
 
 
 def polyline_proximity_join(
@@ -35,66 +69,41 @@ def polyline_proximity_join(
     leaf_col: str = "cell_id",
 ) -> DataFrame:
     """polylines: [{line_id, vertices: [[lat,lng] deg, ...]}, ...].
-    Returns docs columns + line_id + dist_rad for docs within
-    max_distance_rad of the polyline."""
-    cov_rows = []
-    verts_by_line: dict[int, np.ndarray] = {}
-    for spec in polylines:
-        lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts_by_line[lid] = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+    Returns docs columns + line_id for docs within max_distance_rad of
+    the polyline."""
+    verts_by_line = {int(s["line_id"]): _polyline_xyz(s) for s in polylines}
+    # Expanded coverings are normalized (disjoint) and never interior:
+    # every candidate runs the exact distance kernel.
+    cov_rows = [
+        (int(spec["line_id"]), _signed64(c), level_scalar(c), False)
+        for spec in polylines
+        for c in expand_by_radius(
+            polyline_covering(np.asarray(spec["vertices"], dtype=np.float64)),
+            max_distance_rad,
+            6,
         )
-        cov = polyline_covering(v)
-        cov = expand_by_radius(cov, max_distance_rad, 6)
-        for c in cov:
-            cov_rows.append((lid, _sig(c), _lvl(c)))
-    cov_df = spark.createDataFrame(
-        cov_rows, "line_id long, cov_cell long, cov_level int"
-    )
-    levels = sorted({r[2] for r in cov_rows})
-
-    # Single-key banded-prefix join (see spatial_join: the cell id's
-    # lsb encodes its level, so the level equality is implied).
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in levels]
-    )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-    joined = probe.join(
-        F.broadcast(cov_df.drop("cov_level")),
-        F.col("_prefix") == F.col("cov_cell"),
-        "inner",
+    ]
+    cov = spark.createDataFrame(
+        cov_rows,
+        "line_id long, cov_cell long, cov_level int, is_interior boolean",
     )
 
-    @F.pandas_udf(BooleanType())
-    def within(lat: pd.Series, lon: pd.Series, line_id: pd.Series) -> pd.Series:
-        n = len(lat)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        lid_arr = line_id.to_numpy(np.int64)
-        for lid in np.unique(lid_arr):
-            mask = lid_arr == lid
-            verts = verts_by_line[int(lid)]
-            best = np.full(mask.sum(), np.inf)
+    def within(line_id: int, _geometry: list):
+        verts = verts_by_line[line_id]
+
+        def kernel(pts: np.ndarray) -> np.ndarray:
+            best = np.full(len(pts), np.inf)
             for k in range(len(verts) - 1):
-                d = geom.edge_distance_radians(
-                    pts[mask], verts[k], verts[k + 1]
-                )
+                d = geom.edge_distance_radians(pts, verts[k], verts[k + 1])
                 best = np.minimum(best, d)
-            out[mask] = best <= max_distance_rad
-        return pd.Series(out)
+            return best <= max_distance_rad
 
-    # expanded coverings are normalized (disjoint), so each doc matches
-    # at most one covering cell per line: no dedup shuffle needed
-    out_cols = [*docs.columns, "line_id"]
-    return joined.where(
-        within(F.col(lat_col), F.col(lon_col), F.col("line_id"))
-    ).select(*out_cols)
+        return kernel
+
+    return _covering_join(
+        docs, cov, sorted({r[2] for r in cov_rows}), "line_id", within,
+        lat_col, lon_col, leaf_col,
+    )
 
 
 def polyline_project_join(
@@ -115,15 +124,7 @@ def polyline_project_join(
 
     from ..s2core.edges import polyline_project
 
-    verts_by_line = {
-        int(s["line_id"]): geom.normalize(
-            geom.latlng_to_xyz(
-                np.radians(np.asarray(s["vertices"], dtype=np.float64)[:, 0]),
-                np.radians(np.asarray(s["vertices"], dtype=np.float64)[:, 1]),
-            )
-        )
-        for s in polylines
-    }
+    verts_by_line = {int(s["line_id"]): _polyline_xyz(s) for s in polylines}
 
     candidates = polyline_proximity_join(
         spark, docs, polylines, max_distance_rad,
@@ -177,7 +178,7 @@ def _ancestors(cell: int) -> list[int]:
     """cell + every proper ancestor up to the face (driver-side)."""
     out = [cell]
     c = cell
-    while _lvl(c) > 0:
+    while level_scalar(c) > 0:
         c = _parent1_int(c)
         out.append(c)
     return out
@@ -264,10 +265,7 @@ def polyline_region_crossing_join(
     ledge_xyz = []  # (line_id, k, a, b)
     for spec in polylines:
         lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+        verts = _polyline_xyz(spec)
         for k in range(len(verts) - 1):
             ledge_xyz.append((lid, k, verts[k], verts[k + 1]))
 
@@ -302,9 +300,9 @@ def polyline_region_crossing_join(
         for rid, re, c, d in redge_xyz:
             cov, _ = edge_covering(c, d)
             for cell in cov:
-                rcell_raw.append((rid, re, _sig(cell)))
+                rcell_raw.append((rid, re, _signed64(cell)))
                 for anc in _ancestors(cell):
-                    rcell_anc.append((rid, re, _sig(anc)))
+                    rcell_anc.append((rid, re, _signed64(anc)))
         raw_df = spark.createDataFrame(
             rcell_raw, "region_id long, redge long, rcell long"
         ).distinct()
@@ -320,8 +318,8 @@ def polyline_region_crossing_join(
                 (
                     lid, k,
                     *[float(x) for x in a], *[float(x) for x in b],
-                    [_sig(c) for c in cov],
-                    [_sig(c) for c in anc],
+                    [_signed64(c) for c in cov],
+                    [_signed64(c) for c in anc],
                 )
             )
         ledges = spark.createDataFrame(
@@ -352,27 +350,7 @@ def polyline_region_crossing_join(
         ),
         ["line_id", "ledge"],
     ).join(F.broadcast(redges), ["region_id", "redge"])
-
-    @F.pandas_udf(BooleanType())
-    def crosses(*cols: pd.Series) -> pd.Series:
-        if len(cols[0]) == 0:
-            return pd.Series([], dtype=bool)
-        m = [c.to_numpy(np.float64) for c in cols]
-        a = np.stack(m[0:3], axis=1)
-        b = np.stack(m[3:6], axis=1)
-        c_ = np.stack(m[6:9], axis=1)
-        d = np.stack(m[9:12], axis=1)
-        return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
-
-    hit = pairs.where(
-        crosses(
-            F.col("ax"), F.col("ay"), F.col("az"),
-            F.col("bx"), F.col("by"), F.col("bz"),
-            F.col("cx"), F.col("cy"), F.col("cz"),
-            F.col("dx"), F.col("dy"), F.col("dz"),
-        )
-    )
-    return hit.groupBy("line_id", "region_id").agg(
+    return _crossing_pairs(pairs).groupBy("line_id", "region_id").agg(
         F.count(F.lit(1)).alias("n_crossings")
     )
 
@@ -389,10 +367,7 @@ def polyline_region_crossings_numpy(
     out = []
     for spec in polylines:
         lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+        verts = _polyline_xyz(spec)
         for rspec in region_specs:
             if rspec["kind"] not in ("loop", "polygon"):
                 continue
@@ -449,10 +424,7 @@ def polyline_self_crossing_join(
     rows = []
     for spec in polylines:
         lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+        verts = _polyline_xyz(spec)
         for k in range(len(verts) - 1):
             a, b = verts[k], verts[k + 1]
             rows.append(
@@ -498,7 +470,7 @@ def polyline_self_crossing_join(
         out = []
         for i in range(n):
             cov, _ = edge_covering(a[i], b[i])
-            out.append([_sig(c) for c in cov])
+            out.append([_signed64(c) for c in cov])
         return pd.Series(out)
 
     covered = edges.withColumn(
@@ -510,8 +482,6 @@ def polyline_self_crossing_join(
     )
     # ancestor chain natively: parent at each level <= the cell's own
     # (garbage parents above the cell's level are filtered by level)
-    from ..functions.sql_bitops import s2_level, s2_parent as s2_parent_col
-
     raw = covered.select(
         "line_id", "edge", F.explode("cells").alias("cell")
     )
@@ -523,7 +493,6 @@ def polyline_self_crossing_join(
             F.transform(anc_levels, lambda lv: _parent_dyn(F.col("cell"), lv))
         ).alias("cell"),
     ).distinct()
-    _ = s2_parent_col
     cand = (
         anc.alias("pa")
         .join(
@@ -561,29 +530,7 @@ def _self_crossing_refine(edges: DataFrame, cand: DataFrame) -> DataFrame:
         F.col("by").alias("dy"), F.col("bz").alias("dz"),
     )
     pairs = cand.join(ea, ["line_a", "edge_a"]).join(eb, ["line_b", "edge_b"])
-
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def crosses(*cols: pd.Series) -> pd.Series:
-        if len(cols[0]) == 0:
-            return pd.Series([], dtype=bool)
-        m = [c.to_numpy(np.float64) for c in cols]
-        a = np.stack(m[0:3], axis=1)
-        b = np.stack(m[3:6], axis=1)
-        c_ = np.stack(m[6:9], axis=1)
-        d = np.stack(m[9:12], axis=1)
-        return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
-
-    hit = pairs.where(
-        crosses(
-            F.col("ax"), F.col("ay"), F.col("az"),
-            F.col("bx"), F.col("by"), F.col("bz"),
-            F.col("cx"), F.col("cy"), F.col("cz"),
-            F.col("dx"), F.col("dy"), F.col("dz"),
-        )
-    )
-    return hit.groupBy("line_a", "line_b").agg(
+    return _crossing_pairs(pairs).groupBy("line_a", "line_b").agg(
         F.count(F.lit(1)).alias("n_crossings")
     )
 
@@ -620,12 +567,7 @@ def synth_grid_lines(n: int) -> list[dict]:
 
 def polyline_self_crossings_numpy(polylines: list[dict]) -> list[tuple]:
     """Brute all-pairs oracle for :func:`polyline_self_crossing_join`."""
-    chains = {}
-    for spec in polylines:
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        chains[int(spec["line_id"])] = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+    chains = {int(s["line_id"]): _polyline_xyz(s) for s in polylines}
     ids = sorted(chains)
     out = []
     for i, la in enumerate(ids):

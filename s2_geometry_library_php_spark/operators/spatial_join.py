@@ -4,11 +4,10 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
 ``S2EdgeIndex`` probe, S2EdgeIndex.php:85-147,385-448):
 
 1. **Plan-time covering build (driver)**: for each region, compute an
-   exterior covering (candidate superset) and an interior covering
-   (containment-certain subset).  Interior cells are subtracted from
-   the exterior set so each candidate row is either ``is_interior``
-   (skip refine) or boundary (needs the exact kernel) — the
-   filter/refine optimization the reference encodes as interior
+   exterior covering (candidate superset) and flag every cell the
+   region fully contains ``is_interior``, so each candidate row is
+   either interior (skip refine) or boundary (needs the exact kernel)
+   — the filter/refine optimization the reference encodes as interior
    coverings (S2RegionCoverer.php:257-267).
 
 2. **Broadcast equi-join on banded prefixes**: each covering cell at
@@ -24,6 +23,12 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    rect interval) via a pandas UDF over Arrow batches; interior
    matches pass through untouched.
 
+Steps 2 and 3 are one skeleton, :func:`_covering_join`, shared by the
+driver-side region list (:func:`spatial_join`), the region dimension
+table (:func:`spatial_join_region_table`) and the polyline proximity
+join (``polyline_join``): each supplies its covering rows and a per-key
+kernel, nothing else.
+
 At 100 TB scale: stage 2 is map-side only (scan -> project -> BHJ);
 the only shuffles in a typical pipeline are the caller's final
 aggregations.  Skewed hot tiles don't matter for the join itself
@@ -36,22 +41,22 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
     StructType,
 )
 
-from ..s2core import cellid as cid
+from ..functions.sql_bitops import _signed64, s2_parent
+from ..s2core.cellid import level_scalar
 from ..s2core.coverer import RegionCoverer, normalize_cell_union
 from ..s2core.region import Region, region_from_params
 
@@ -64,6 +69,10 @@ COVERING_SCHEMA = StructType(
     ]
 )
 
+
+#: builds a key's refine kernel from the key and its geometry values;
+#: the kernel maps unit xyz points (n, 3) to a bool containment mask
+KernelFor = Callable[[int, list], Callable[[np.ndarray], np.ndarray]]
 
 # Banded level grid for the join coverings: every covering cell sits
 # at one of these levels, so the probe side only materializes 4 prefix
@@ -108,25 +117,54 @@ def compute_coverings(
     if disk is not None:
         _COVERING_CACHE[key] = disk
         return disk
+    rows = _covering_rows(
+        (
+            (int(r["region_id"]),
+             _region(r["kind"], r["params"], r.get("loop_offsets")))
+            for r in regions
+        ),
+        max_cells, min_level, max_level, level_mod,
+    )
+    _COVERING_CACHE[key] = rows
+    _disk_cache_store(key, rows)
+    return rows
+
+
+def _region(kind: str, params, loop_offsets=None) -> Region:
+    """Region from its table encoding (REGION_TABLE_SCHEMA); Arrow
+    hands the array columns over as numpy arrays."""
+    return region_from_params(
+        kind,
+        [float(x) for x in params],
+        None if loop_offsets is None else [int(x) for x in loop_offsets],
+    )
+
+
+def _covering_rows(
+    regions: Iterable[tuple[int, Region]],
+    max_cells: int,
+    min_level: int,
+    max_level: int,
+    level_mod: int,
+) -> list[tuple[int, int, int, bool]]:
+    """COVERING_SCHEMA rows of (region_id, region) pairs: each region's
+    exterior covering, every cell flagged ``is_interior`` by an exact
+    ``contains_cell`` test."""
     from ..s2core.cell import Cell
 
-    rows: list[tuple[int, int, int, bool]] = []
-    for spec in regions:
-        region = region_from_params(
-            spec["kind"], spec["params"], spec.get("loop_offsets")
-        )
-        rid = int(spec["region_id"])
-        exterior = RegionCoverer(
+    rows = []
+    for region_id, region in regions:
+        cells = RegionCoverer(
             min_level=min_level,
             max_level=max_level,
             level_mod=level_mod,
             max_cells=max_cells,
         ).get_covering(region)
-        for c in exterior:
-            is_interior = region.contains_cell(Cell(c))
-            rows.append((rid, _sig(c), _lvl(c), bool(is_interior)))
-    _COVERING_CACHE[key] = rows
-    _disk_cache_store(key, rows)
+        rows += [
+            (region_id, _signed64(c), level_scalar(c),
+             bool(region.contains_cell(Cell(c))))
+            for c in cells
+        ]
     return rows
 
 
@@ -163,41 +201,12 @@ def _disk_cache_store(key, rows) -> None:
         pass
 
 
-def cell_union_difference(
-    a_cells: list[int], b_cells: list[int], grid: tuple[int, ...] | None = None
-) -> list[int]:
+def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
     """Cell set A \\ B (S2CellUnion getDifference semantics,
     S2CellUnion.php:227-313 family): split A cells recursively until
-    disjoint from or contained in B.
-
-    With ``grid``, output cells are additionally split down to the
-    nearest grid level (keeps the banded-prefix join's explosion factor
-    at len(grid))."""
-    grid_set = set(grid) if grid else None
-
-    def on_grid(c: int) -> bool:
-        if grid_set is None:
-            return True
-        lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-        level = 30 - ((lsb.bit_length() - 1) >> 1)
-        return level in grid_set
-
+    disjoint from or contained in B."""
     if not b_cells:
-        out0: list[int] = []
-
-        def snap(c: int) -> None:
-            if on_grid(c):
-                out0.append(c)
-                return
-            lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-            child = c - lsb + (lsb >> 2)
-            step = (lsb >> 2) << 1
-            for k in range(4):
-                snap(child + k * step)
-
-        for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
-            snap(c)
-        return out0
+        return [x & 0xFFFFFFFFFFFFFFFF for x in a_cells]
     b_ranges = sorted(
         ((c - ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF,
          (c + ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF)
@@ -222,7 +231,7 @@ def cell_union_difference(
         lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
         lo, hi = c - (lsb - 1), c + (lsb - 1)
         state = overlaps(lo, hi)
-        if state == "none" and on_grid(c):
+        if state == "none":
             out.append(c)
             return
         if state == "full":
@@ -230,7 +239,6 @@ def cell_union_difference(
         if lsb == 1:  # leaf that still partially overlaps: keep
             out.append(c)
             return
-        # split into 4 children (also used to snap onto the grid)
         child = c - lsb + (lsb >> 2)
         step = (lsb >> 2) << 1
         for k in range(4):
@@ -238,19 +246,7 @@ def cell_union_difference(
 
     for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
         rec(c)
-    if grid_set is None:
-        return normalize_cell_union(out)
-    return sorted(out)  # already disjoint; normalize would leave the grid
-
-
-def _sig(u: int) -> int:
-    u &= 0xFFFFFFFFFFFFFFFF
-    return u - (1 << 64) if u >= 1 << 63 else u
-
-
-def _lvl(u: int) -> int:
-    lsb = u & (-u & 0xFFFFFFFFFFFFFFFF)
-    return cid.MAX_LEVEL - ((lsb.bit_length() - 1) >> 1)
+    return normalize_cell_union(out)
 
 
 def build_covering_table(
@@ -277,9 +273,7 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     eps = 1e-9
     terms = []
     for spec in regions:
-        reg = region_from_params(
-            spec["kind"], spec["params"], spec.get("loop_offsets")
-        )
+        reg = _region(spec["kind"], spec["params"], spec.get("loop_offsets"))
         bound = reg.get_rect_bound()
         lat_lo = math.degrees(bound.lat.lo) - eps
         lat_hi = math.degrees(bound.lat.hi) + eps
@@ -308,21 +302,23 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     return out
 
 
-def _refine_udf(regions: list[dict]):
-    """Pandas UDF closure: exact containment for (lat, lon, region_id)
-    batches. Region objects are rebuilt once per executor (closure
-    serialization), then containment is one vectorized kernel call per
-    region present in the batch."""
-
-    specs = {int(r["region_id"]): r for r in regions}
-    cache: dict[int, Region] = {}
+def _refine_udf(kernel_for: KernelFor):
+    """The one exact refine of every covering join, as an Arrow UDF over
+    (lat, lon, key, is_interior, *geometry) batches.  Interior-covering
+    matches are containment-certain and pass through with zero kernel
+    work (the filter/refine split); the other rows run one vectorized
+    kernel call per key present in the batch.  ``kernel_for(key,
+    geometry)`` gets the key's first row's ``geometry`` values;
+    kernels are memoized per worker."""
+    kernels: dict[int, Callable] = {}
 
     @F.pandas_udf(BooleanType())
     def refine(
         lat: pd.Series,
         lon: pd.Series,
-        region_id: pd.Series,
+        key: pd.Series,
         is_interior: pd.Series,
+        *geometry: pd.Series,
     ) -> pd.Series:
         from ..s2core import geom
 
@@ -330,28 +326,74 @@ def _refine_udf(regions: list[dict]):
         out = np.zeros(n, dtype=bool)
         if n == 0:
             return pd.Series(out)
-        # Interior-covering matches are containment-certain: pass
-        # through with zero kernel work (the filter/refine split).
         interior = is_interior.to_numpy(bool)
         out[interior] = True
         todo = ~interior
         if not np.any(todo):
             return pd.Series(out)
-        rid_arr = region_id.to_numpy(np.int64)
-        lat_arr = np.radians(lat.to_numpy(np.float64))
-        lon_arr = np.radians(lon.to_numpy(np.float64))
-        pts = geom.latlng_to_xyz(lat_arr, lon_arr)
-        for rid in np.unique(rid_arr[todo]):
-            spec = specs[int(rid)]
-            if int(rid) not in cache:
-                cache[int(rid)] = region_from_params(
-                    spec["kind"], spec["params"], spec.get("loop_offsets")
-                )
-            mask = todo & (rid_arr == rid)
-            out[mask] = cache[int(rid)].contains_points(pts[mask])
+        keys = key.to_numpy(np.int64)
+        pts = geom.latlng_to_xyz(
+            np.radians(lat.to_numpy(np.float64)),
+            np.radians(lon.to_numpy(np.float64)),
+        )
+        for k in np.unique(keys[todo]).tolist():
+            mask = todo & (keys == k)
+            if k not in kernels:
+                i = int(np.argmax(mask))
+                kernels[k] = kernel_for(k, [g.iloc[i] for g in geometry])
+            out[mask] = kernels[k](pts[mask])
         return pd.Series(out)
 
     return refine
+
+
+def _covering_join(
+    docs: DataFrame,
+    cov: DataFrame,
+    levels: Sequence[int],
+    key: str,
+    kernel_for: KernelFor,
+    lat_col: str,
+    lon_col: str,
+    leaf_col: str,
+    geometry: tuple[str, ...] = (),
+    broadcast: bool = True,
+) -> DataFrame:
+    """The covering join's skeleton: ``docs`` (carrying the leaf
+    ``leaf_col``) x covering rows ``cov`` (``key``, ``cov_cell``,
+    ``cov_level``, ``is_interior`` and any ``geometry`` columns the
+    kernel needs), keeping the pairs :func:`_refine_udf` accepts.
+    Returns ``docs`` columns + ``key``.  Every cell of ``cov`` must sit
+    at one of ``levels``, and a key's cells must be disjoint: then a
+    probe matches at most one covering row per key, so the join needs
+    no dedup shuffle."""
+    # Probe side: one prefix key per covering level (a plain long-array
+    # explode; stays narrow, no shuffle).  A single equi-key suffices:
+    # a cell id's lowest set bit encodes its level (S2CellId.php:
+    # 211-243), so s2_parent(leaf, L') = cov_cell already implies
+    # L' = cov_level — no second join key, no struct materialization
+    # through the exploded rows.
+    prefixes = F.array(*[s2_parent(F.col(leaf_col), lvl) for lvl in levels])
+    probe = docs.withColumn("_prefix", F.explode(prefixes))
+    build = cov.drop("cov_level")
+    joined = probe.join(
+        F.broadcast(build) if broadcast else build,
+        F.col("_prefix") == F.col("cov_cell"),
+        "inner",
+    )
+    # SINGLE pass: the refine kernel receives is_interior and passes
+    # interior matches through untouched — avoids a union that would
+    # re-execute the probe subtree twice.
+    refine = _refine_udf(kernel_for)
+    return joined.where(
+        refine(
+            F.col(lat_col),
+            F.col(lon_col),
+            F.col(key),
+            F.col("is_interior"),
+            *[F.col(c) for c in geometry],
+        )
+    ).select(*docs.columns, key)
 
 
 def spatial_join(
@@ -370,50 +412,24 @@ def spatial_join(
     carry the leaf ``cell_id`` (from ``functions.s2_cell_id``).
     """
     cov_rows = compute_coverings(regions, max_cells=max_cells)
-    levels = sorted({lvl for _, _, lvl, _ in cov_rows})
     cov = spark.createDataFrame(cov_rows, COVERING_SCHEMA)
-
     if prefilter:
         docs = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
+    # Region objects are rebuilt from the closure's specs once per
+    # worker (closure serialization); the closure refers to s2core
+    # only, so Python workers never import the operators package.
+    specs = {int(r["region_id"]): r for r in regions}
 
-    # Probe side: one prefix key per covering level present (a plain
-    # long-array explode; stays narrow, no shuffle).  A single equi-key
-    # suffices: a cell id's lowest set bit encodes its level
-    # (S2CellId.php:211-243), so s2_parent(leaf, L') = cov_cell already
-    # implies L' = cov_level — no second join key, no struct
-    # materialization through the exploded rows.
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in levels]
+    def contains(region_id: int, _geometry: list):
+        spec = specs[region_id]
+        return region_from_params(
+            spec["kind"], spec["params"], spec.get("loop_offsets")
+        ).contains_points
+
+    return _covering_join(
+        docs, cov, sorted({lvl for _, _, lvl, _ in cov_rows}), "region_id",
+        contains, lat_col, lon_col, leaf_col,
     )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-
-    joined = probe.join(
-        F.broadcast(cov.drop("cov_level")),
-        F.col("_prefix") == F.col("cov_cell"),
-        "inner",
-    )
-
-    # Covering rows are disjoint per region, so no dedup is needed.
-    # SINGLE pass: the refine kernel receives is_interior and passes
-    # interior matches through untouched (masked, zero kernel work) —
-    # avoids a union that would re-execute the probe subtree twice.
-    doc_cols = [c for c in docs.columns]
-    out_cols = [*doc_cols, "region_id"]
-    refine = _refine_udf(regions)
-    return joined.where(
-        refine(
-            F.col(lat_col),
-            F.col(lon_col),
-            F.col("region_id"),
-            F.col("is_interior"),
-        )
-    ).select(*out_cols)
-
-
-def _parent_col(cell_id, level: int):
-    lsb = 1 << (2 * (cid.MAX_LEVEL - level))
-    neg = _sig(-lsb & 0xFFFFFFFFFFFFFFFF)
-    return cell_id.bitwiseAND(F.lit(neg)).bitwiseOR(F.lit(lsb))
 
 
 # --- distributed region path (large region sets, SURVEY.md §3.2) ---------------
@@ -452,86 +468,18 @@ def build_covering_table_distributed(
     parallel.  Output schema matches COVERING_SCHEMA."""
 
     def gen(batches):
-        from ..s2core.cell import Cell
-
         for pdf in batches:
-            out = {
-                "region_id": [], "cov_cell": [], "cov_level": [],
-                "is_interior": [],
-            }
-            for row in pdf.itertuples(index=False):
-                offsets = (
-                    None if row.loop_offsets is None
-                    else [int(x) for x in row.loop_offsets]
-                )
-                region = region_from_params(
-                    row.kind, [float(x) for x in row.params], offsets
-                )
-                exterior = RegionCoverer(
-                    min_level=min_level,
-                    max_level=max_level,
-                    level_mod=level_mod,
-                    max_cells=max_cells,
-                ).get_covering(region)
-                for c in exterior:
-                    out["region_id"].append(int(row.region_id))
-                    out["cov_cell"].append(_sig(c))
-                    out["cov_level"].append(_lvl(c))
-                    out["is_interior"].append(
-                        bool(region.contains_cell(Cell(c)))
-                    )
-            yield pd.DataFrame(out)
+            rows = _covering_rows(
+                (
+                    (int(r.region_id),
+                     _region(r.kind, r.params, r.loop_offsets))
+                    for r in pdf.itertuples(index=False)
+                ),
+                max_cells, min_level, max_level, level_mod,
+            )
+            yield pd.DataFrame(rows, columns=COVERING_SCHEMA.fieldNames())
 
     return regions_df.mapInPandas(gen, COVERING_SCHEMA)
-
-
-def _refine_udf_from_table():
-    """Refine kernel for the distributed-region path: region geometry
-    arrives per-row (joined from the region table) instead of via a
-    driver closure, so the region set size is unbounded.  Regions are
-    rebuilt once per (batch, region_id) group and memoized per worker."""
-    cache: dict[int, Region] = {}
-
-    @F.pandas_udf(BooleanType())
-    def refine(
-        lat: pd.Series,
-        lon: pd.Series,
-        region_id: pd.Series,
-        is_interior: pd.Series,
-        kind: pd.Series,
-        params: pd.Series,
-        loop_offsets: pd.Series,
-    ) -> pd.Series:
-        from ..s2core import geom
-
-        n = len(lat)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        interior = is_interior.to_numpy(bool)
-        out[interior] = True
-        todo = ~interior
-        if not np.any(todo):
-            return pd.Series(out)
-        rid_arr = region_id.to_numpy(np.int64)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        for rid in np.unique(rid_arr[todo]):
-            mask = todo & (rid_arr == rid)
-            if int(rid) not in cache:
-                i = int(np.argmax(mask))
-                offs = loop_offsets.iloc[i]
-                cache[int(rid)] = region_from_params(
-                    kind.iloc[i],
-                    [float(x) for x in params.iloc[i]],
-                    None if offs is None else [int(x) for x in offs],
-                )
-            out[mask] = cache[int(rid)].contains_points(pts[mask])
-        return pd.Series(out)
-
-    return refine
 
 
 def spatial_join_region_table(
@@ -551,27 +499,18 @@ def spatial_join_region_table(
     and region tables are broadcast (the common case); otherwise both
     joins fall back to shuffle joins and the path scales to region
     sets far beyond driver memory."""
+    # The region geometry rides on the covering rows (the refine reads
+    # it per row), so the region table joins the small side, not the
+    # candidate stream.
     cov = build_covering_table_distributed(regions_df, max_cells=max_cells)
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in JOIN_LEVEL_GRID]
+    cov = cov.join(
+        F.broadcast(regions_df) if broadcast_covering else regions_df,
+        "region_id",
     )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-    cov_side = cov.drop("cov_level")
-    if broadcast_covering:
-        cov_side = F.broadcast(cov_side)
-    joined = probe.join(
-        cov_side, F.col("_prefix") == F.col("cov_cell"), "inner"
+    return _covering_join(
+        docs, cov, JOIN_LEVEL_GRID, "region_id",
+        lambda _rid, geometry: _region(*geometry).contains_points,
+        lat_col, lon_col, leaf_col,
+        geometry=("kind", "params", "loop_offsets"),
+        broadcast=broadcast_covering,
     )
-    reg_side = regions_df
-    if broadcast_covering:
-        reg_side = F.broadcast(reg_side)
-    joined = joined.join(reg_side, "region_id", "inner")
-    refine = _refine_udf_from_table()
-    out_cols = [*docs.columns, "region_id"]
-    return joined.where(
-        refine(
-            F.col(lat_col), F.col(lon_col), F.col("region_id"),
-            F.col("is_interior"), F.col("kind"), F.col("params"),
-            F.col("loop_offsets"),
-        )
-    ).select(*out_cols)

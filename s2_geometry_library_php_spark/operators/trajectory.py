@@ -88,9 +88,10 @@ def trajectory_stats(
         F.col("_x"), F.col("_y"), F.col("_z"),
     )
     stepped = pt.withColumn("_step", step)
-    # endpoints via min/max(struct): ts-ordered with the xyz fields as
-    # a deterministic tiebreak (coincident-timestamp endpoints pick
-    # the lexicographically extreme point — a pure function of input)
+    # endpoints via min/max(struct) in the path window's own order
+    # (ts, then order_cols), with the xyz fields as the last tiebreak:
+    # the endpoints are the path's first and last points, and
+    # coincident ones still resolve as a pure function of the input
     agg = (
         stepped.groupBy("entity")
         .agg(
@@ -101,8 +102,8 @@ def trajectory_stats(
             ),
             F.min("_ts").alias("t_start"),
             F.max("_ts").alias("t_end"),
-            F.min(F.struct("_ts", "_x", "_y", "_z")).alias("_first"),
-            F.max(F.struct("_ts", "_x", "_y", "_z")).alias("_last"),
+            F.min(F.struct("_ts", *order_cols, "_x", "_y", "_z")).alias("_first"),
+            F.max(F.struct("_ts", *order_cols, "_x", "_y", "_z")).alias("_last"),
         )
     )
     net = _angle_rad(

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, at least 1g: in local mode the
+    driver JVM runs every task and shares the host with the Python
+    workers, so it must never ask for more than the machine has."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, ram // (2 << 20))}m"
+
+
 def get_spark(
     app_name: str = "s2-spark-engine",
     master: str | None = None,
@@ -57,7 +65,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Broadcast the covering table even if stats are conservative.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

@@ -278,10 +278,6 @@ def cell_id_from_latlng_degrees(lat: np.ndarray, lng: np.ndarray) -> np.ndarray:
 
 
 # --- decode ------------------------------------------------------------------
-def face_of(ids: np.ndarray) -> np.ndarray:
-    return (np.asarray(ids, dtype=np.uint64) >> _U64(POS_BITS)).astype(np.int64)
-
-
 def cell_to_face_ij_orientation(
     ids: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:

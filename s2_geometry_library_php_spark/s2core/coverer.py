@@ -377,15 +377,6 @@ def _parent_at(i: int, level: int) -> int:
     return (i & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
 
 
-def covering_area_ratio(region: Region, covering: list[int]) -> float:
-    """Covering area / region area diagnostic (the accuracy metric in
-    S2RegionCoverer.php:172-176)."""
-    total = 0.0
-    for i in covering:
-        total += Cell(i).exact_area()
-    return total
-
-
 # --- cell union measures ------------------------------------------------------
 def leaf_cells_covered(ids) -> float:
     """Number of level-30 leaves under the union, as a float — the

@@ -3,10 +3,12 @@ keep-first span removal, island merging, thresholds, short-doc and
 column preservation, and a hypothesis fuzz against the pure-Python
 twin."""
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from s2_geometry_library_php_spark.functions import exact_substr
 from s2_geometry_library_php_spark.functions.exact_substr import (
     duplicate_grams,
     duplicate_spans,
@@ -132,6 +134,17 @@ def test_native_and_arrow_paths_agree(spark):
     arrow = _collect(strip_duplicate_spans(df, k=K))
     native = _collect(strip_duplicate_spans(df, k=K, native=True))
     assert arrow == native
+
+
+def test_native_path_fails_loudly_on_position_overflow(spark, monkeypatch):
+    # Shrink the packed position field so a 20-token document overflows
+    # it: the native path must fail instead of running pos into doc_id.
+    monkeypatch.setattr(exact_substr, "_POS_BITS", 3)
+    monkeypatch.setattr(exact_substr, "_POS_PACK", 1 << 3)
+    words = " ".join(f"w{i}" for i in range(20))
+    df = _mkdocs(spark, [(1, words), (2, words)])
+    with pytest.raises(Exception, match="gram positions must fit in 3 bits"):
+        strip_duplicate_spans(df, k=4, native=True).collect()
 
 
 @given(

@@ -583,6 +583,63 @@ def test_spatial_join_region_table_matches_driver_path(spark, docs):
         assert got == expected, f"broadcast_covering={bc}"
 
 
+def _physical_nodes(df):
+    """(nodeName, one-line description) of every node of ``df``'s
+    physical plan, descending into the adaptive plan but not into
+    cached relations (their plans ran when the cache was built)."""
+    out = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        out.append((node.nodeName(), node.simpleString(100)))
+        children = node.children().iterator()
+        while children.hasNext():
+            stack.append(children.next())
+    return out
+
+
+def test_covering_joins_plan_shape(spark, docs):
+    """All three covering joins run one banded-prefix broadcast probe and
+    never fall back to a sort-merge, nested-loop or cartesian join; the
+    flagship's single Arrow refine keeps its ``refine`` name."""
+    from s2_geometry_library_php_spark.operators.polyline_join import (
+        polyline_proximity_join,
+    )
+    from s2_geometry_library_php_spark.operators.spatial_join import (
+        regions_to_df,
+        spatial_join,
+        spatial_join_region_table,
+    )
+
+    d = docs.select("doc_id", "lat", "lon", "cell_id")
+    line = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0]]}]
+    plans = {
+        "spatial_join": _physical_nodes(
+            spatial_join(spark, d, region_fixtures())
+        ),
+        "region_table": _physical_nodes(
+            spatial_join_region_table(
+                spark, d, regions_to_df(spark, region_fixtures())
+            )
+        ),
+        "polyline": _physical_nodes(
+            polyline_proximity_join(spark, d, line, 300e3 / 6371e3)
+        ),
+    }
+    names = {k: [n for n, _ in v] for k, v in plans.items()}
+    assert names["spatial_join"].count("BroadcastHashJoin") == 1
+    refines = [s for n, s in plans["spatial_join"] if n == "ArrowEvalPython"]
+    assert len(refines) == 1 and "refine(" in refines[0]
+    assert names["region_table"].count("BroadcastHashJoin") == 2
+    assert names["polyline"].count("BroadcastHashJoin") == 1
+    for k, v in names.items():
+        for bad in ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"):
+            assert bad not in v, (k, bad)
+
+
 def test_stateful_running_tiles_across_microbatches(spark, docs, tmp_path):
     """applyInPandasWithState running per-tile stats: stream the corpus
     as TWO micro-batches (maxFilesPerTrigger=1 over two files); the

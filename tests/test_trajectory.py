@@ -134,6 +134,32 @@ def test_tie_break_determinism(spark):
     assert abs(r1["path_rad"] - math.pi) < 1e-12
 
 
+def test_tied_timestamp_endpoints_follow_order_cols(spark):
+    # Both ends of each path are tied on ts; order_cols puts the
+    # path's true first / last point where the xyz tiebreak alone would
+    # pick the other one (lon 90 has the smaller x than lon 0).
+    rows = [
+        # path (0,0) -> (0,90) -> (0,180): net is the half circle
+        (1, 0, 0.0, 0.0, 10),
+        (1, 0, 0.0, 90.0, 20),
+        (1, 1, 0.0, 180.0, 30),
+        # path (0,0) -> (10,0) -> (0,90): net is the quarter circle
+        (2, 0, 0.0, 0.0, 10),
+        (2, 1, 10.0, 0.0, 20),
+        (2, 1, 0.0, 90.0, 30),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts long, lat double, lon double, eid long"
+    )
+    got = {
+        r["entity"]: r
+        for r in trajectory_stats(df, order_cols=("eid",)).collect()
+    }
+    assert abs(got[1]["net_rad"] - math.pi) < 1e-12
+    assert abs(got[1]["sinuosity"] - 1.0) < 1e-12
+    assert abs(got[2]["net_rad"] - EARTH_QUARTER) < 1e-12
+
+
 def test_tile_path_compression(spark):
     from s2_geometry_library_php_spark.functions import s2_cell_id
 
